@@ -112,7 +112,6 @@ def generate_dim_date(
     (1=Sunday..7=Saturday); weeks begin Sunday; SameDayPreviousYear is
     minus one calendar year; WeekNumberOfMonth is ceil(day/7).
     """
-    n_days = F.datediff(F.lit(end).cast("date"), F.lit(start).cast("date"))
     d = F.col("FullDate")
     dow = F.dayofweek(d)
     holiday = _holiday_name(d)
@@ -122,7 +121,6 @@ def generate_dim_date(
             "FullDate"
         )
     )
-    del n_days
     return days.select(
         F.date_format(d, "yyyyMMdd").cast("int").alias("DateID"),
         d,

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sfcrimedatapipeline_spark.functions.caching import unpersist_when_released
 from sfcrimedatapipeline_spark.plans import fact as fact_ops
 from sfcrimedatapipeline_spark.plans.dims import generate_dim_date, generate_dim_time
 from sfcrimedatapipeline_spark.plans.pipeline import transform
@@ -122,14 +123,15 @@ def _staging_from_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 #: sf_dir → (session, star-schema tables). One transform graph serves
 #: BOTH queries below (VERDICT r4 #7): the 7-join fact plan is analyzed
-#: once per session, and the staging/dim frames transform() persists for
-#: one query's action serve the other — in the correctness gate, which
-#: runs the two back-to-back with the cache intact, serve reuses every
-#: dim fact materialized. After an external spark.catalog.clearCache()
-#: (the bench does this between reps) the memoized graph still computes
-#: correctly — cleared cache scans recompute through their lineage — and
-#: still skips the multi-second re-analysis of the 7-join plan; callers
-#: who instead want cache-backed reruns build a fresh transform().
+#: once per session, and the staging frame persisted here and the dim
+#: frames transform() persists for one query's action serve the other —
+#: in the correctness gate, which runs the two back-to-back with the
+#: cache intact, serve reuses every dim fact materialized. After an
+#: external spark.catalog.clearCache() (the bench does this between
+#: reps) the memoized graph still computes correctly — cleared cache
+#: scans recompute through their lineage — and still skips the
+#: multi-second re-analysis of the 7-join plan; callers who instead want
+#: cache-backed reruns build a fresh transform().
 #: Keyed on session identity so a new SparkSession (tests) rebuilds.
 _MEMO: dict[str, tuple[SparkSession, dict[str, DataFrame]]] = {}
 
@@ -137,11 +139,13 @@ _MEMO: dict[str, tuple[SparkSession, dict[str, DataFrame]]] = {}
 def _tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     entry = _MEMO.get(sf_dir)
     if entry is None or entry[0] is not spark:
+        staging = _staging_from_events(spark, sf_dir).persist()
         tables = transform(
-            _staging_from_events(spark, sf_dir),
+            staging,
             generate_dim_date(spark, *DATE_RANGE),
             generate_dim_time(spark),
         )
+        unpersist_when_released(tables["FactCrime"], staging)
         entry = (spark, tables)
         _MEMO[sf_dir] = entry
     return entry[1]

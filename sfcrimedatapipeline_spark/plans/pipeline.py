@@ -12,9 +12,11 @@ from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from sfcrimedatapipeline_spark.functions.caching import unpersist_when_released
 from sfcrimedatapipeline_spark.operators.keys import load_order_id
 from sfcrimedatapipeline_spark.plans.dims import (
     build_dim_incident,
@@ -37,27 +39,25 @@ def transform(
 ) -> dict[str, DataFrame]:
     """The 7-statement transform graph (dags/ELT.py:113-301) as dataflow.
 
-    The staging frame feeds the fact build AND three dim DISTINCTs, and
-    the generated dims are each joined more than once (DimTime twice in
-    the fact build alone) — persist them so one evaluation serves the
-    whole graph. This mirrors the reference, which materializes every
-    one of these as a Postgres table before joining; Spark's cache is
-    the in-memory equivalent and CacheManager transparently reuses the
-    entries across the downstream serve query too.
-    """
-    from sfcrimedatapipeline_spark.functions.caching import (
-        unpersist_when_released,
-    )
+    Every dim is persisted, so each one is computed once however many
+    consumers it has: its own write, the fact build's broadcasts (DimDate
+    is joined twice) and the serve query's broadcasts.
+    This mirrors the reference, which materializes each dim as a Postgres
+    table before the fact ``INSERT..SELECT`` reads it. The three
+    staging-derived dims would otherwise each re-run their DISTINCT +
+    ROW_NUMBER for every consumer.
 
-    staging_with_id = staging_with_id.persist()
-    dim_date = dim_date.persist()
-    dim_time = dim_time.persist()
+    ``staging_with_id`` is the load step's table, read by the three dim
+    builds and the fact build: the caller materializes it (run_pipeline
+    caches the parsed feed). The dim caches are released when the caller
+    drops the returned fact frame.
+    """
     dims = {
-        "DimDate": dim_date,
-        "DimTime": dim_time,
-        "DimLocation": build_dim_location(staging_with_id),
-        "DimIncident": build_dim_incident(staging_with_id),
-        "DimReportType": build_dim_report_type(staging_with_id),
+        "DimDate": dim_date.persist(),
+        "DimTime": dim_time.persist(),
+        "DimLocation": build_dim_location(staging_with_id).persist(),
+        "DimIncident": build_dim_incident(staging_with_id).persist(),
+        "DimReportType": build_dim_report_type(staging_with_id).persist(),
     }
     fact = build_fact_crime(
         staging_with_id,
@@ -71,8 +71,8 @@ def transform(
     # Release the per-run caches when the caller drops the fact frame
     # (dicts are not weakref-able; every caller keeps the fact at least
     # as long as the dims) — a long-lived app running many pipelines
-    # must not accumulate per-run cached staging/dim frames (ADVICE r4).
-    fact = unpersist_when_released(fact, staging_with_id, dim_date, dim_time)
+    # must not accumulate per-run cached dim frames (ADVICE r4).
+    fact = unpersist_when_released(fact, *dims.values())
     return {**dims, "FactCrime": fact}
 
 
@@ -115,6 +115,15 @@ def run_pipeline(
             F.count("Incident Date").alias("n_with_incident_date"),
             F.sum(F.col("Latitude").isNull().cast("long")).alias("n_null_latitude"),
         )
+    # Load (COPY + SERIAL, dags/ELT.py:92-100): the feed is parsed once
+    # into the staging cache, and the load-order id's per-partition counts
+    # read that cache instead of rescanning the file. The cache keeps all
+    # 34 columns: FAILFAST rejects a malformed field only when the whole
+    # row is parsed, and a projected scan would skip that check.
+    release = []
+    if staging.storageLevel == StorageLevel.NONE:
+        staging = staging.persist()
+        release.append(staging)
     staging_with_id = load_order_id(staging, "id")
 
     tables = transform(
@@ -123,18 +132,33 @@ def run_pipeline(
         generate_dim_time(spark),
         fix_report_time_id=fix_report_time_id,
     )
+    fact = unpersist_when_released(tables["FactCrime"], *release)
+    if output_dir:
+        for name, df in tables.items():
+            write_table(df, os.path.join(output_dir, name))
     if serve:
-        tables["ServeInitialReports"] = serve_initial_reports(
-            tables["FactCrime"],
+        # Serve reads the fact's materialization instead of re-running the
+        # 7-join: the written table, as the reference's serve reads
+        # FactCrime, else a cache of the fact.
+        if output_dir:
+            source = spark.read.parquet(os.path.join(output_dir, "FactCrime"))
+        else:
+            source = fact.persist()
+        served = serve_initial_reports(
+            source,
             tables["DimDate"],
             tables["DimTime"],
             tables["DimLocation"],
             tables["DimIncident"],
             tables["DimReportType"],
         )
+        # The serve frame holds the fact, and so every refresh cache, for
+        # as long as the caller holds it; dropping it releases the fact
+        # cache (the fact cannot release its own cache: the finalizer
+        # would keep the frame alive).
+        tables["ServeInitialReports"] = unpersist_when_released(served, fact)
         if serve_export_dir:
-            export_csv(tables["ServeInitialReports"], serve_export_dir)
-    if output_dir:
-        for name, df in tables.items():
-            write_table(df, os.path.join(output_dir, name))
+            export_csv(served, serve_export_dir)
+        if output_dir:
+            write_table(served, os.path.join(output_dir, "ServeInitialReports"))
     return tables

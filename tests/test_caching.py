@@ -36,6 +36,14 @@ def _n_persistent_rdds(spark) -> int:
     return spark.sparkContext._jsc.getPersistentRDDs().size()
 
 
+def _is_cached(spark, jdf) -> bool:
+    """Whether CacheManager holds an entry for this JVM Dataset's plan
+    (updated synchronously by unpersist, unlike the persistent-RDD
+    count, which the ContextCleaner lowers later)."""
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    return cache_manager.lookupCachedData(jdf).isDefined()
+
+
 def test_triangle_count_releases_edge_cache(spark):
     spark.catalog.clearCache()
     gc.collect()
@@ -104,8 +112,35 @@ def test_pipeline_transform_releases_caches(spark, staging):
         generate_dim_date(spark, "2018-01-01", "2018-12-31"),
         generate_dim_time(spark),
     )
+    dims = ["DimDate", "DimTime", "DimLocation", "DimIncident", "DimReportType"]
+    dim_plans = [tables[name]._jdf for name in dims]
     assert tables["FactCrime"].count() > 0
+    assert all(_is_cached(spark, plan) for plan in dim_plans)
     assert _n_persistent_rdds(spark) > base
     del tables
     gc.collect()
+    assert not any(_is_cached(spark, plan) for plan in dim_plans)
     assert _settled_persistent_rdds(spark, base) <= base
+
+
+def test_run_pipeline_releases_caches(spark, staging):
+    """The staging, dim and fact caches of a refresh go when the caller
+    drops the tables; a caller's own cached staging frame stays cached."""
+    from sfcrimedatapipeline_spark.plans.pipeline import run_pipeline
+
+    spark.catalog.clearCache()
+    gc.collect()
+    staging.cache().count()
+    base = _n_persistent_rdds(spark)
+    tables = run_pipeline(spark, staging.filter(F.col("Row ID") % 2 == 0))
+    plans = [df._jdf for df in tables.values()]
+    assert tables["ServeInitialReports"].count() > 0
+    assert tables["FactCrime"].count() > 0
+    # every table but serve is cached
+    assert [_is_cached(spark, plan) for plan in plans] == [True] * 6 + [False]
+    assert _n_persistent_rdds(spark) > base
+    del tables
+    gc.collect()
+    assert not any(_is_cached(spark, plan) for plan in plans)
+    assert _settled_persistent_rdds(spark, base) <= base
+    assert _is_cached(spark, staging._jdf)

@@ -22,9 +22,8 @@ from sfcrimedatapipeline_spark.plans.pipeline import run_pipeline
 
 @pytest.fixture(scope="module")
 def tables(spark, staging):
-    t = run_pipeline(spark, staging, date_range=("2018-01-01", "2024-12-31"))
-    t["FactCrime"] = t["FactCrime"].cache()
-    return t
+    # serve=True without output_dir: run_pipeline caches the fact
+    return run_pipeline(spark, staging, date_range=("2018-01-01", "2024-12-31"))
 
 
 def test_fact_count_equals_staging(tables, staging):
@@ -139,3 +138,89 @@ def test_run_pipeline_observation_metrics(spark, staging):
     assert m["n_rows"] == n_fact == staging.count()
     assert 0 <= m["n_with_incident_date"] <= m["n_rows"]
     assert 0 <= m["n_null_latitude"] <= m["n_rows"]
+
+
+def _feed_lines(df, tmp_path) -> list[str]:
+    """``df`` as the lines of a pipe-delimited SFPD feed file."""
+    import glob
+
+    from sfcrimedatapipeline_spark.sources.csv import SFPD_TIMESTAMP_FORMAT
+
+    out = str(tmp_path / "written")
+    (
+        df.coalesce(1)
+        .write.option("sep", "|")
+        .option("header", True)
+        .option("timestampFormat", SFPD_TIMESTAMP_FORMAT)
+        .csv(out)
+    )
+    (part,) = glob.glob(f"{out}/part-*.csv")
+    with open(part) as fh:
+        return fh.read().splitlines()
+
+
+def _write_feed(lines: list[str], tmp_path, name: str = "feed.csv") -> str:
+    # a new file: editing Spark's part file would fail its .crc check
+    path = str(tmp_path / name)
+    with open(path, "w") as fh:
+        fh.write("\n".join(lines) + "\n")
+    return path
+
+
+def test_run_pipeline_failfast_on_unread_column(spark, staging, tmp_path):
+    """A malformed value in a column no star table reads (CNN) still
+    fails the refresh: the staging cache parses every column of every
+    row, so FAILFAST sees the whole row."""
+    header, first, *rest = _feed_lines(staging.limit(50), tmp_path)
+    clean = _write_feed([header, first, *rest], tmp_path, "clean.csv")
+    run_pipeline(spark, clean, output_dir=str(tmp_path / "clean"))
+    fields = first.split("|")
+    fields[header.split("|").index("CNN")] = "not-a-number"
+    bad = _write_feed([header, "|".join(fields), *rest], tmp_path, "bad.csv")
+    with pytest.raises(Exception, match="MALFORMED_RECORD_IN_PARSING"):
+        run_pipeline(spark, bad, output_dir=str(tmp_path / "bad"))
+
+
+def _plan_nodes(plan) -> list:
+    """Every node of a JVM logical plan (not descending into caches)."""
+    nodes, stack = [], [plan]
+    while stack:
+        node = stack.pop()
+        nodes.append(node)
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return nodes
+
+
+def test_refresh_computes_each_table_once(spark, staging, tmp_path):
+    """One refresh parses the feed once (the load-order id's partition
+    counts read the staging cache) and serve reads the written fact and
+    the dim caches instead of re-deriving them from staging."""
+    import os
+
+    feed = _write_feed(_feed_lines(staging, tmp_path), tmp_path)
+    fs = spark._jvm.org.apache.hadoop.fs.FileSystem
+
+    def bytes_read() -> int:
+        return sum(s.getBytesRead() for s in fs.getAllStatistics())
+
+    before = bytes_read()
+    tables = run_pipeline(spark, feed, output_dir=str(tmp_path / "out"))
+    assert bytes_read() - before < 1.5 * os.path.getsize(feed)
+
+    nodes = _plan_nodes(
+        tables["ServeInitialReports"]._jdf.queryExecution().optimizedPlan()
+    )
+    names = [n.nodeName() for n in nodes]
+    # no DISTINCT + ROW_NUMBER dim derivation, no 7-way LEFT fact join
+    assert "Window" not in names and "Aggregate" not in names
+    assert [n.joinType().toString() for n in nodes if n.nodeName() == "Join"] == [
+        "Inner"
+    ] * 5
+    leaves = [n for n in nodes if n.children().size() == 0]
+    assert sorted(n.nodeName() for n in leaves) == ["InMemoryRelation"] * 5 + [
+        "LogicalRelation"
+    ]
+    (fact_scan,) = [n for n in leaves if n.nodeName() == "LogicalRelation"]
+    files = list(fact_scan.relation().inputFiles())
+    assert files and all("/out/FactCrime/" in f for f in files)
